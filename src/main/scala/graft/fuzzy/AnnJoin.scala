@@ -314,7 +314,7 @@ object AnnJoin {
     // driver (the former single largest candidate-generation stage).
     val (gatePredicate, capStats) = CapMetrics.gateWithStats(bucketStats, "fuzzy_lsh",
       "__band", "__bkey", overCap, col("__lc") * col("__rc"), opts.checkpoint,
-      estBuckets = sys.env.get("GRAFT_AB_OLDGATE").map(_ => -1L).getOrElse(estBandRows))
+      estBuckets = estBandRows)
 
     // Volume bail (auto mode): plan on THIS gate call's returned stats —
     // `lastMetrics("fuzzy_lsh")` is a global keyed by stage name, so under

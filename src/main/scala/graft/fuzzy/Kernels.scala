@@ -169,8 +169,9 @@ object Kernels {
     var bEnd = b.numBytes
     // Common prefix/suffix stripping, 8 bytes at a time: corpora with a
     // shared prefix (e.g. "Customer#000...") made the byte-wise strip the
-    // dominant per-pair cost AFTER the r19 diagonal kernel (GateShapeAb:
-    // ~60% of the surviving-pair cost on the 225M-pair names row).
+    // dominant per-pair cost AFTER the r19 diagonal kernel (~60% of the
+    // surviving-pair cost on the 225M-pair names row, OPTIMIZATION_r19.md
+    // change D).
     if (wordWise) {
       val baseA = a.getBaseObject
       val offA = a.getBaseOffset
@@ -266,24 +267,48 @@ object Kernels {
   /** Thresholded distance: exact normalized distance when it is <=
     * `maxDist`, any value > maxDist otherwise (2.0). Semantically
     * interchangeable with [[dist]] under a `<= maxDist` filter, but prunes
-    * with cheap length bounds and a banded DP. Levenshtein on pure-ASCII
+    * with [[lengthReject]] and a banded DP. Levenshtein on pure-ASCII
     * inputs takes an allocation-free byte path. */
   def distBounded(id: Int, a: UTF8String, b: UTF8String, maxDist: Double): Double = {
-    if (id == 0) {
+    // isFullAscii is a word-wise high-bit scan — cheaper than the old
+    // numChars walk (which decodes UTF-8 lengths byte by byte)
+    if (id == 0 && a.isFullAscii && b.isFullAscii) {
       val la = a.numBytes
       val lb = b.numBytes
-      // isFullAscii is a word-wise high-bit scan — cheaper than the old
-      // numChars walk (which decodes UTF-8 lengths byte by byte)
-      if (a.isFullAscii && b.isFullAscii) {
-        val mx = math.max(la, lb)
-        if (mx == 0) return 0.0
-        val k = (maxDist * mx).toInt
-        if (math.abs(la - lb) > k) return 2.0
-        val d = levBoundedAscii(a, b, k)
-        return if (d > k) 2.0 else d.toDouble / mx
-      }
+      val mx = math.max(la, lb)
+      if (mx == 0) return 0.0
+      if (lengthReject(0, la, lb, maxDist)) return 2.0
+      val k = (maxDist * mx).toInt
+      val d = levBoundedAscii(a, b, k)
+      return if (d > k) 2.0 else d.toDouble / mx
     }
     distBoundedGeneric(id, a, b, maxDist)
+  }
+
+  /** Length-only reject of [[distBounded]]: true when ANY two strings of
+    * lengths `la` and `lb` (UTF-16 units, `String.length`; byte length for
+    * ASCII) are beyond `maxDist` under algorithm `id`. One function for
+    * the kernel and for [[FuzzySweep]]'s length bands, so the two cannot
+    * drift apart. With `mx = max(la, lb)` and `diff = |la - lb|`:
+    *  - levenshtein / damerau: dist >= diff edits, so reject when
+    *    `diff > floor(maxDist * mx)` (the bounded kernels' own budget k);
+    *  - padded hamming: dist >= diff mismatches, `diff > maxDist * mx`;
+    *  - indel: dist >= diff over `la + lb`, `diff > floor(maxDist * (la + lb))`;
+    *  - jaro: sim <= (min/max + 2) / 3, so dist >= diff / (3 * mx);
+    *  - jaro-winkler: the prefix boost recovers at most 0.4 of the jaro
+    *    gap (4 * 0.1), so dist >= 0.6 * diff / (3 * mx) = diff / (5 * mx).
+    * Empty pairs are never rejected (diff = 0). */
+  def lengthReject(id: Int, la: Int, lb: Int, maxDist: Double): Boolean = {
+    val mx = math.max(la, lb)
+    val diff = math.abs(la - lb)
+    id match {
+      case 0 | 4 => diff > (maxDist * mx).toInt
+      case 3 => diff > maxDist * mx
+      case 5 => diff > (maxDist * (la + lb)).toInt
+      case 1 => diff > 3.0 * maxDist * mx
+      case 2 => diff > 5.0 * maxDist * mx
+      case _ => throw new IllegalArgumentException(s"bad algorithm id $id")
+    }
   }
 
   private def distBoundedGeneric(id: Int, a: UTF8String, b: UTF8String, maxDist: Double): Double = {
@@ -291,49 +316,33 @@ object Kernels {
     val sb = b.toString
     val la = sa.length
     val lb = sb.length
+    if (lengthReject(id, la, lb, maxDist)) return 2.0
     val mx = math.max(la, lb)
-    val diff = math.abs(la - lb)
     id match {
-      case 0 => // levenshtein: dist >= diff/mx
+      case 0 =>
         if (mx == 0) 0.0
         else {
           val k = (maxDist * mx).toInt
-          if (diff > k) 2.0
-          else {
-            val d = levenshteinBounded(sa, sb, k)
-            if (d > k) 2.0 else d.toDouble / mx
-          }
+          val d = levenshteinBounded(sa, sb, k)
+          if (d > k) 2.0 else d.toDouble / mx
         }
-      case 3 => // hamming (padded): dist >= diff/mx
-        if (mx == 0) 0.0
-        else if (diff > maxDist * mx) 2.0
-        else hammingDist(sa, sb)
-      case 4 => // damerau <= levenshtein shares the length bound
+      case 3 => hammingDist(sa, sb)
+      case 4 =>
         if (mx == 0) 0.0
         else {
           val k = (maxDist * mx).toInt
-          if (diff > k) 2.0
-          else {
-            val d = damerauBounded(sa, sb, k)
-            if (d > k) 2.0 else d.toDouble / mx
-          }
+          val d = damerauBounded(sa, sb, k)
+          if (d > k) 2.0 else d.toDouble / mx
         }
-      case 5 => // indel: dist >= diff/(la+lb)
+      case 5 =>
         if (la + lb == 0) 0.0
         else {
           val k = (maxDist * (la + lb)).toInt
-          if (diff > k) 2.0
-          else {
-            val d = indelBounded(sa, sb, k)
-            if (d > k) 2.0 else d.toDouble / (la + lb)
-          }
+          val d = indelBounded(sa, sb, k)
+          if (d > k) 2.0 else d.toDouble / (la + lb)
         }
-      case 1 => // jaro: sim <= (min/max + 2) / 3 => dist >= (1 - min/max)/3
-        if (diff > 3.0 * maxDist * mx) 2.0 else jaroDist(sa, sb)
-      case 2 =>
-        // jaro-winkler: the prefix boost can recover up to 0.4 of the jaro
-        // gap (4 * 0.1), so dist >= 0.6 * (1 - jaroBound) = 0.2 * diff / mx
-        if (diff > 5.0 * maxDist * mx) 2.0 else jaroWinklerDist(sa, sb)
+      case 1 => jaroDist(sa, sb)
+      case 2 => jaroWinklerDist(sa, sb)
       case _ => throw new IllegalArgumentException(s"bad algorithm id $id")
     }
   }

@@ -137,15 +137,20 @@ final case class MatchOptions(
     // sample of at most this many values (corpus-wide stats would cost more
     // than the exact join the probe is trying to avoid)
     lshProbeSampleSize: Int = 10000,
-    // Broadcast the smaller value-level side of an exact cross join when it
-    // has at most this many distinct values (driver-side hint; AQE may still
-    // pick broadcast on its own).
+    // Slice size of the exact sweep: its smaller value-level side is
+    // collected and broadcast in hash slices of about this many distinct
+    // values (one slice when it fits). Also the combined value count up to
+    // which the LSH path broadcasts its value re-attach maps.
     broadcastDistinctLimit: Long = 200_000L,
     // Materialization barrier for multi-consumer intermediates. Local is
     // fastest but dies with a lost executor; pass Reliable(dir) for
     // fault-tolerant multi-pass jobs on a real cluster (the reference's
     // caller-owned temp dir, matcher.py:580-658).
-    checkpoint: graft.util.CheckpointStrategy = graft.util.CheckpointStrategy.Local)
+    checkpoint: graft.util.CheckpointStrategy = graft.util.CheckpointStrategy.Local) {
+  require(broadcastDistinctLimit >= 1,
+    s"broadcastDistinctLimit is the exact sweep's slice size and must be >= 1 " +
+      s"(got $broadcastDistinctLimit)")
+}
 
 object MatchOptions {
   val default: MatchOptions = MatchOptions()

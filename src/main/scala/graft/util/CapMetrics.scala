@@ -78,10 +78,10 @@ object CapMetrics {
     *    volume-bail/exact-fallback territory): allowed-frame join.
     *
     * `bandCol` must be int-typed, `keyCol` long-typed; the driver-side key
-    * is `key * 131 + band` (the multiplier must exceed every validated band
-    * count — currently ≤ 64 — or distinct (band, key) pairs collide and a
-    * healthy bucket could be dropped with an over-cap one), matching
-    * [[graft.fuzzy.BucketAllowed]] which MUST stay in sync. A 64-bit hash
+    * is `key * 131 + band` (the multiplier must exceed every band count —
+    * AnnJoin validates bands `< 131` — or distinct (band, key) pairs
+    * collide and a healthy bucket could be dropped with an over-cap one),
+    * matching [[graft.fuzzy.BucketAllowed]] which MUST stay in sync. A 64-bit hash
     * collision between a dropped and a kept bucket key drops the kept
     * bucket too: a bounded recall perturbation (same class as the cap
     * itself, ~drops x buckets / 2^64), never a wrong score. */
@@ -177,12 +177,7 @@ object CapMetrics {
       if (row.isNullAt(1)) 0L else row.getLong(1),
       if (row.isNullAt(2)) 0L else row.getLong(2),
       if (row.isNullAt(3)) 0L else row.getLong(3))
-    last.put(stage, s)
-    if (s.droppedBuckets > 0)
-      log.warn(s"[graft.cap] $stage: dropped ${s.droppedBuckets} of ${s.totalBuckets} buckets " +
-        s"(~${s.droppedPairs} candidate pairs) — raise the bucket cap or dedup inputs first")
-    else
-      log.info(s"[graft.cap] $stage: no buckets dropped (total ${s.totalBuckets})")
+    record(stage, s)
     (stats, s)
   }
 }

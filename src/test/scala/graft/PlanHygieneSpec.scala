@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape guards for the properties that matter at 100 TB: filters and
-  * projections must reach the parquet scan, the value-level cross join must
-  * broadcast its small side, and scoring must run inside WholeStageCodegen.
+  * projections must reach the parquet scan, exact value scoring must be the
+  * broadcast sweep rather than a nested-loop join, and LSH re-attach joins
+  * must broadcast their value maps.
   * These regress silently — a refactor that breaks pushdown still returns
   * correct rows, just 100x slower on a real corpus.
   */
@@ -50,23 +51,23 @@ class PlanHygieneSpec extends AnyFunSuite with SparkSpec {
       s"jaccard gate missing from the candidate plan:\n$plan")
   }
 
-  test("exact value scoring: broadcast cross join, kernel filter inside codegen") {
+  test("exact value scoring: one sweep Generate, no nested-loop join (damerau)") {
     val c = spark.read.parquet(s"$dir/customer.parquet")
     val s = spark.read.parquet(s"$dir/supplier.parquet")
     val cIdx = FuzzyMatcher.addIndexColumn(c, "__left_index")
     val sIdx = FuzzyMatcher.addIndexColumn(s, "__right_index")
-    val cand = FuzzyMatcher.freshCandidates(cIdx, sIdx, "c_name", "s_name",
-      MatchOptions(useApproxNearestNeighbor = Some(false)), reversedThreshold = 0.3)
-    val scored = FuzzyMatcher.scoreValuePairs(cand, "c_name", "s_name",
-      FuzzyAlgorithm.Levenshtein, 0.3)
+    val (scored, usedLsh) = FuzzyMatcher.freshScoredValuePairs(cIdx, sIdx,
+      FuzzyMapping("c_name", "s_name", 70.0, FuzzyAlgorithm.DamerauLevenshtein),
+      MatchOptions(useApproxNearestNeighbor = Some(false)))
+    assert(!usedLsh)
     val plan = scored.queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastNestedLoopJoin") || plan.contains("BroadcastExchange"),
-      s"small value side not broadcast in the exact cross join:\n$plan")
-    // the bounded kernel must be FUSED into the join condition — the
-    // cartesian stream is filtered as it is produced, never materialized
-    val joinLine = plan.linesIterator.find(_.contains("BroadcastNestedLoopJoin"))
-    assert(joinLine.exists(_.contains("dist_bounded")),
-      s"bounded kernel not fused into the join condition:\n$plan")
+    // candidate generation and the kernel are one Generate over the larger
+    // side's value frame; the smaller side is a broadcast table inside it
+    val generate = plan.linesIterator.find(_.contains("Generate"))
+    assert(generate.exists(_.contains("fuzzy_sweep")),
+      s"exact scoring is not the sweep Generate:\n$plan")
+    assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"),
+      s"exact scoring still plans a nested-loop join:\n$plan")
   }
 
   test("hash sampling is a pure pushed-past-pruning filter: no shuffle anywhere") {

@@ -73,25 +73,21 @@ class ConcurrentMatchSpec extends AnyFunSuite with SparkSpec {
     val (degLeft, degRight) = degFrames
     val (divLeft, divRight) = divFrames
 
-    def decide(left: DataFrame, right: DataFrame): String =
+    val probe = FuzzyMapping("k", "g", 90.0, FuzzyAlgorithm.Levenshtein)
+    def decide(left: DataFrame, right: DataFrame): Boolean =
       MatchScope.withMatchScope {
-        val cands = FuzzyMatcher.freshCandidates(left, right, "k", "g", opts,
-          reversedThreshold = 0.1)
-        // consume inside the scope; the plan string carries the decision
-        val plan = cands.queryExecution.executedPlan.toString
-        cands.count()
-        plan
+        val (scored, usedLsh) = FuzzyMatcher.freshScoredValuePairs(left, right, probe, opts)
+        // consume inside the scope; the flag carries the decision
+        scored.count()
+        usedLsh
       }
 
     for (round <- 0 until 3) {
-      val (degPlan, divPlan) = runPair(
+      val (degLsh, divLsh) = runPair(
         decide(degLeft, degRight), decide(divLeft, divRight), round)
-      assert(degPlan.contains("CartesianProduct") ||
-          degPlan.contains("BroadcastNestedLoopJoin"),
+      assert(!degLsh,
         s"round $round: the degenerate join's volume gate did not bail to exact")
-      assert(!divPlan.contains("CartesianProduct") &&
-          !divPlan.contains("BroadcastNestedLoopJoin"),
-        s"round $round: the diverse join lost its LSH plan")
+      assert(divLsh, s"round $round: the diverse join lost its LSH plan")
     }
   }
 

@@ -174,6 +174,47 @@ class KernelsSpec extends AnyFunSuite {
     }
   }
 
+  test("lengthReject is sound: a rejected pair is beyond maxDist (property, six algorithms)") {
+    import org.apache.spark.unsafe.types.UTF8String
+    val rnd = new scala.util.Random(23)
+    def word(): String = {
+      val len = rnd.nextInt(16)
+      (0 until len).map(_ => ('a' + rnd.nextInt(5)).toChar).mkString
+    }
+    var rejected = 0
+    (0 until 4000).foreach { _ =>
+      val (a, b) = (word(), word())
+      val (ua, ub) = (UTF8String.fromString(a), UTF8String.fromString(b))
+      for (algo <- FuzzyAlgorithm.all) {
+        val maxDist = FuzzyMapping("a", "b", rnd.nextInt(101).toDouble, algo).reversedThresholdScore
+        if (Kernels.lengthReject(algo.id, a.length, b.length, maxDist)) {
+          rejected += 1
+          assert(Kernels.dist(algo.id, ua, ub) > maxDist,
+            s"${algo.name}('$a', '$b') rejected on length but within $maxDist")
+          assert(Kernels.distBounded(algo.id, ua, ub, maxDist) > maxDist)
+        }
+      }
+    }
+    assert(rejected > 1000, s"only $rejected rejected pairs: the property is vacuous")
+  }
+
+  test("lengthReject is monotone in rLen on either side of lLen (every integer threshold)") {
+    // the sweep's binary search and early stop rely on this: for a fixed
+    // left length, rejected right lengths form the two tails r < lo and
+    // r > hi
+    for (algo <- FuzzyAlgorithm.all; t <- 0 to 100; l <- 0 to 120) {
+      val maxDist = FuzzyMapping("a", "b", t.toDouble, algo).reversedThresholdScore
+      def rej(r: Int) = Kernels.lengthReject(algo.id, l, r, maxDist)
+      assert(!rej(l), s"${algo.name} t=$t rejects equal lengths $l")
+      for (r <- 1 to l)
+        assert(!rej(r) || rej(r - 1),
+          s"${algo.name} t=$t l=$l: rejects $r but not ${r - 1}")
+      for (r <- l to 3 * l + 8)
+        assert(!rej(r) || rej(r + 1),
+          s"${algo.name} t=$t l=$l: rejects $r but not ${r + 1}")
+    }
+  }
+
   test("levBoundedAscii (diagonal DP) == levenshtein for every cutoff (property)") {
     import org.apache.spark.unsafe.types.UTF8String
     val rnd = new scala.util.Random(19)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.ExplainMode
 
-import graft.fuzzy.{FuzzyAlgorithm, FuzzyMatcher, MatchOptions}
+import graft.fuzzy.{AnnJoin, FuzzyAlgorithm, FuzzyMapping, FuzzyMatcher, MatchOptions}
 
 /** Commit-able `.explain("formatted")` capture for the optimization rounds:
   * writes `plans/<round>/<name>_<tag>.txt` for the bench's fuzzy rows and
@@ -16,9 +16,10 @@ import graft.fuzzy.{FuzzyAlgorithm, FuzzyMatcher, MatchOptions}
   * query is being BUILT (checkpoint barriers), so the tail explain of a
   * full `matchDfs` shows only the assembly joins over checkpoint scans.
   * The plan that actually carries the runtime — candidate generation +
-  * the scored cross join — is therefore captured separately via the same
-  * public entry points the matcher uses (`freshCandidates` +
-  * `scoreValuePairs`). Everything runs at sf0.001: plan SHAPE is
+  * scoring — is therefore captured separately via the same public entry
+  * points the matcher uses (`freshScoredValuePairs` for a whole fresh
+  * pass, `AnnJoin.candidates` for the LSH candidate frame alone).
+  * Everything runs at sf0.001: plan SHAPE is
   * scale-independent, and dumping must not take bench-scale minutes.
   *
   * Usage: Test/runMain graft.tools.PlanDump <tag> [round]
@@ -46,28 +47,28 @@ object PlanDump {
 
     val c = spark.read.parquet(s"$sfDir/customer.parquet")
 
-    // ---- the scoring-join core (exact path): distinct values -> projected
-    // sides -> cross join -> bounded kernel (+ mask gate after r19) ----
+    // ---- the exact scoring core: distinct values -> broadcast sweep
+    // (kernel inside the Generate), for levenshtein and damerau ----
     val l = c.select(col("c_name"))
     val r = c.select(col("c_name").as("r_name"))
-    // the path the matcher actually takes since r20: the fused broadcast
-    // sweep (freshScoredValuePairs) — before-plans show the BNLJ shape it
-    // replaced (freshCandidates + scoreValuePairs)
-    dump("scoring_join_exact",
+    def fresh(algo: FuzzyAlgorithm, threshold: Double, opts: MatchOptions): DataFrame =
       FuzzyMatcher.freshScoredValuePairs(l, r,
-        graft.fuzzy.FuzzyMapping("c_name", "r_name", 90.0,
-          FuzzyAlgorithm.Levenshtein),
-        MatchOptions(useApproxNearestNeighbor = Some(false)))._1)
+        FuzzyMapping("c_name", "r_name", threshold, algo), opts)._1
+    val exact = MatchOptions(useApproxNearestNeighbor = Some(false))
+    dump("scoring_join_exact", fresh(FuzzyAlgorithm.Levenshtein, 90.0, exact))
+    dump("scoring_join_exact_damerau", fresh(FuzzyAlgorithm.DamerauLevenshtein, 75.0, exact))
+    // a small side over broadcastDistinctLimit: one sweep per hash slice
+    dump("scoring_join_exact_sliced",
+      fresh(FuzzyAlgorithm.Levenshtein, 90.0, exact.copy(broadcastDistinctLimit = 100L)))
 
     // ---- the LSH candidate pipeline core (band join -> dedup -> jaccard
     // gate -> topN) + its scored verify join ----
     val opts = MatchOptions(lshNumBands = 12, lshRowsPerBand = 5,
       useApproxNearestNeighbor = Some(true))
-    val lshCands = FuzzyMatcher.freshCandidates(l, r, "c_name", "r_name", opts, 0.1)
-    dump("lsh_candidates", lshCands)
-    dump("scoring_join_lsh",
-      FuzzyMatcher.scoreValuePairs(lshCands, "c_name", "r_name",
-        FuzzyAlgorithm.Levenshtein, 0.1))
+    dump("lsh_candidates",
+      AnnJoin.candidates(FuzzyMatcher.distinctValues(l, "c_name"),
+        FuzzyMatcher.distinctValues(r, "r_name"), "c_name", "r_name", opts, 0.1))
+    dump("scoring_join_lsh", fresh(FuzzyAlgorithm.Levenshtein, 90.0, opts))
 
     // ---- full bench queries (tail assembly plans; barriers make these
     // short, captured for completeness) ----
