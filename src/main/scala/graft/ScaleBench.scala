@@ -44,9 +44,8 @@ object ScaleBench {
     }),
     // ---- multi-pass fold on the same 2.25e10-pair corpus: pass 2 must
     // cost survivor-bound time on top of fuzzy_auto_22g, not another
-    // cartesian (measured round 9: +5.0 s on 133 s — SCALE.md;
-    // tools.MultiPassScale is the instrumented twin with per-phase
-    // shuffle volumes)
+    // cartesian (measured round 9: +5.0 s on 133 s — SCALE.md; perfbench's
+    // multipass_damerau_4k times the fold's passes layer by layer)
     "fuzzy_multi_22g" -> ((s: SparkSession) => {
       val c = s.read.parquet(s"$sfDir/customer.parquet")
       FuzzyMatcher.matchDfs(c, c, Seq(

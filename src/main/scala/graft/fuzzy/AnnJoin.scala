@@ -34,11 +34,29 @@ import graft.util.CapMetrics
   * cannot separate them and the LSH path costs more than the exact cross
   * join while losing recall — [[candidatesOrExactFallback]] then returns
   * None so the caller runs exact (if the cartesian permits). The probe runs
-  * on a ≤`lshProbeSampleSize` uniform sample: corpus-wide gram statistics
-  * would cost more than the exact join the probe is trying to avoid
-  * (measured: ~25 s of pure probe overhead at sf0.1 before sampling).
+  * on a ≤[[ProbeSampleSize]] uniform sample.
   */
 object AnnJoin {
+
+  /** Character n-gram size of the MinHash gram sets. */
+  val NgramSize = 3
+
+  /** Ceiling on the jaccard-distance verify gate, which is otherwise
+    * derived from the edit threshold (see `adaptiveGate` in
+    * [[buildOrBail]]). */
+  val JaccardDistanceCeiling = 0.85
+
+  /** Below this many surviving (non-stop) grams a value reverts to its full
+    * gram set: tiny and asymmetric kept sets make MinHash recall collapse
+    * (measured 0.9 -> 0.5 on 18-char names with multiply-add permutations;
+    * full-avalanche SplitMix64 plus this floor restored >= 0.99). */
+  val MinKeptGrams = 8
+
+  /** The degeneracy probe and the stop-gram estimate read a uniform sample
+    * of at most this many values: corpus-wide gram statistics would cost
+    * more than the exact join the probe is trying to avoid (measured ~25 s
+    * of pure probe overhead at sf0.1 before sampling). */
+  val ProbeSampleSize = 10000
 
   /** The LSH top-N ranks through the BoundedTopK TypedImperativeAggregate
     * (ObjectHashAggregate). Its default sort-based fallback threshold (128
@@ -53,16 +71,36 @@ object AnnJoin {
   private val FallbackConf =
     "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
 
+  /** Per session: how many scoped passes are running, and the value the
+    * first of them replaced. Guarded by its own monitor. Overlapping passes
+    * on one session share the override: the first to enter saves and sets,
+    * the last to leave restores. Saving per pass instead let a pass that
+    * entered second restore the OVERRIDE after the first had restored the
+    * original, leaving the session at 4194304 for good. */
+  private val heapConfOverrides =
+    scala.collection.mutable.HashMap.empty[org.apache.spark.sql.SparkSession, (Int, Option[String])]
+
   private[fuzzy] def withTopKHeapConf[T](
       spark: org.apache.spark.sql.SparkSession, scoped: Boolean)(body: => T): T = {
     if (!scoped) body
     else {
-      val prev = spark.conf.getOption(FallbackConf)
-      spark.conf.set(FallbackConf, "4194304")
+      heapConfOverrides.synchronized {
+        val (running, prev) =
+          heapConfOverrides.getOrElse(spark, (0, spark.conf.getOption(FallbackConf)))
+        if (running == 0) spark.conf.set(FallbackConf, "4194304")
+        heapConfOverrides(spark) = (running + 1, prev)
+      }
       try body
-      finally prev match {
-        case Some(v) => spark.conf.set(FallbackConf, v)
-        case None => spark.conf.unset(FallbackConf)
+      finally heapConfOverrides.synchronized {
+        val (running, prev) = heapConfOverrides(spark)
+        if (running > 1) heapConfOverrides(spark) = (running - 1, prev)
+        else {
+          heapConfOverrides.remove(spark)
+          prev match {
+            case Some(v) => spark.conf.set(FallbackConf, v)
+            case None => spark.conf.unset(FallbackConf)
+          }
+        }
       }
     }
   }
@@ -82,25 +120,24 @@ object AnnJoin {
                                 leftCol: String, rightCol: String,
                                 opts: MatchOptions, reversedThreshold: Double,
                                 totalValues: Long, cartesian: Double): Option[DataFrame] = {
-    require(opts.lshNumBands >= 1 && opts.lshNumBands < 131,
-      s"lshNumBands must be in [1, 130] (got ${opts.lshNumBands})")
-    val n = opts.lshNgramSize
+    CapMetrics.requireBands("lshNumBands", opts.lshNumBands)
+    val n = NgramSize
 
     val probeApplies =
       cartesian <= opts.lshExactFallbackCartesianCap && opts.lshExactFallbackCartesianCap > 0
 
-    // ONE Spark action: collect the ≤`lshProbeSampleSize` sampled values
+    // ONE Spark action: collect the ≤ProbeSampleSize sampled values
     // (a few hundred KB) and run the whole probe — stop-gram estimation
     // and per-value kept-gram counts — in plain Scala on the driver.
     // Cluster-side aggregation would cost three jobs plus a barrier for
     // work that is microseconds at this size. Returns true when the corpus
     // is too degenerate for LSH.
     def probeDegenerate(): Boolean = {
-      val frac = math.min(1.0, opts.lshProbeSampleSize.toDouble / math.max(totalValues, 1L))
+      val frac = math.min(1.0, ProbeSampleSize.toDouble / math.max(totalValues, 1L))
       val sampled: Array[String] = leftValues.select(col(leftCol).as("__v"))
         .unionByName(rightValues.select(col(rightCol).as("__v")))
         .sample(withReplacement = false, frac, seed = 42L)
-        .limit(2 * opts.lshProbeSampleSize)
+        .limit(2 * ProbeSampleSize)
         .collect().map(_.getString(0)).filter(_ != null).map(_.toLowerCase)
       val nSample = sampled.length
       if (nSample == 0) return false
@@ -112,7 +149,7 @@ object AnnJoin {
       gramSets.foreach(_.foreach(g => docFreq.merge(g, 1, Integer.sum)))
       val stopBar = opts.lshStopGramFraction * nSample
       val ok = gramSets.count { gs =>
-        gs.count(g => docFreq.get(g) <= stopBar) >= opts.lshMinKeptGrams
+        gs.count(g => docFreq.get(g) <= stopBar) >= MinKeptGrams
       }
       1.0 - ok.toDouble / nSample > opts.lshDegenerateFraction
     }
@@ -120,7 +157,7 @@ object AnnJoin {
     // The probe collect and the stop-gram estimation job are independent
     // reads of the same value frames — overlap them (guide §2.6). When the
     // probe bails, the stop-gram sample job ran for nothing, but it was
-    // concurrent with the probe and is sample-bounded (O(lshProbeSampleSize)
+    // concurrent with the probe and is sample-bounded (O(ProbeSampleSize)
     // regardless of corpus size), so the bail case pays ~nothing while the
     // proceed case saves the whole serial stop-gram latency.
     val (isDegenerate, stopGrams) =
@@ -154,10 +191,7 @@ object AnnJoin {
                  leftCol: String, rightCol: String,
                  opts: MatchOptions, reversedThreshold: Double = 1.0,
                  totalValues: Long = -1L): DataFrame = {
-    // CapMetrics' blocked-key encoding is key*131+band — band counts
-    // past 130 would alias distinct buckets (silent recall loss)
-    require(opts.lshNumBands >= 1 && opts.lshNumBands < 131,
-      s"lshNumBands must be in [1, 130] (got ${opts.lshNumBands})")
+    CapMetrics.requireBands("lshNumBands", opts.lshNumBands)
     val total =
       if (totalValues > 0) totalValues
       else leftValues.count() + rightValues.count()
@@ -180,8 +214,8 @@ object AnnJoin {
   private def estimateStopGrams(leftValues: DataFrame, rightValues: DataFrame,
                                 leftCol: String, rightCol: String,
                                 opts: MatchOptions, total: Long): Array[String] = {
-    val n = opts.lshNgramSize
-    val sampleFrac = math.min(1.0, opts.lshProbeSampleSize.toDouble / math.max(total, 1L))
+    val n = NgramSize
+    val sampleFrac = math.min(1.0, ProbeSampleSize.toDouble / math.max(total, 1L))
     leftValues.select(col(leftCol).as("__v"))
       .unionByName(rightValues.select(col(rightCol).as("__v")))
       .sample(withReplacement = false, sampleFrac, seed = 42L)
@@ -215,7 +249,7 @@ object AnnJoin {
                     bailVolume: Option[Double],
                     valueId: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
                       c => xxhash64(c)): Option[DataFrame] = {
-    val n = opts.lshNgramSize
+    val n = NgramSize
     val bands = opts.lshNumBands
     val rows = opts.lshRowsPerBand
     val k = bands * rows
@@ -244,7 +278,7 @@ object AnnJoin {
             vectorFunctions.lsh_band_keys(
               vectorFunctions.minhash_signature(
                 vectorFunctions.kept_grams(lower(col(vCol)), n, stopGrams,
-                  opts.lshMinKeptGrams),
+                  MinKeptGrams),
                 k),
               bands, rows)))
         .withColumnRenamed("pos", "__band")
@@ -312,9 +346,10 @@ object AnnJoin {
     // (band, key) buckets: past ~500k buckets CapMetrics accounts
     // cluster-side instead of collecting every healthy bucket to the
     // driver (the former single largest candidate-generation stage).
-    val (gatePredicate, capStats) = CapMetrics.gateWithStats(bucketStats, "fuzzy_lsh",
+    val gate = CapMetrics.gate(bucketStats, "fuzzy_lsh",
       "__band", "__bkey", overCap, col("__lc") * col("__rc"), opts.checkpoint,
       estBuckets = estBandRows)
+    val capStats = gate.stats
 
     // Volume bail (auto mode): plan on THIS gate call's returned stats —
     // `lastMetrics("fuzzy_lsh")` is a global keyed by stage name, so under
@@ -336,18 +371,9 @@ object AnnJoin {
     // The capped band join as a function of the left banded frame, so the
     // volume-bail estimator below can run it on a SAMPLE of left values
     // before the real join runs on all of them.
-    val gatedJoin: DataFrame => DataFrame = lbIn => gatePredicate match {
-      case Right(blockedKeys) =>
-        // keep rows whose bucket is NOT in the dropped set (O(drops) driver
-        // state — no join against the bucket list at any corpus size)
-        val keep = (df: DataFrame) =>
-          if (blockedKeys.isEmpty) df
-          else df.where(!vectorFunctions.bucket_allowed(col("__band"), col("__bkey"), blockedKeys))
-        keep(lbIn).join(keep(rb), Seq("__band", "__bkey"))
-      case Left(allowed) =>
-        lbIn.join(allowed, Seq("__band", "__bkey"))
-          .join(rb, Seq("__band", "__bkey"))
-    }
+    val gatedJoin: DataFrame => DataFrame = lbIn =>
+      gate.keep(lbIn, col("__band"), col("__bkey"))
+        .join(gate.prune(rb, col("__band"), col("__bkey")), Seq("__band", "__bkey"))
 
     bailVolume match {
       case Some(budget) =>
@@ -388,7 +414,7 @@ object AnnJoin {
     val f = reversedThreshold
     val adaptiveGate = math.min(
       math.max(1.15 * (2.0 * n * f) / (1.0 + n * f), 0.25),
-      opts.lshJaccardDistanceThreshold)
+      JaccardDistanceCeiling)
 
     // Candidate pipeline, narrow-payload end to end:
     //   band equi-join on id rows (16 B/pair) -> dropDuplicates on the id

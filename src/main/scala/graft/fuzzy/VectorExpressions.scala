@@ -144,31 +144,6 @@ case class WinnowSketch(child: Expression, k: Int, window: Int,
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-/** Membership of the (band, bucket-key) pair in a driver-collected key set,
-  * stored as a sorted long array probed by binary search — the
-  * broadcast-hash-join of bucket gating without the join stage. Callers of
-  * [[graft.util.CapMetrics.gate]] negate it over the DROPPED keys (keep =
-  * not blocked), so driver state is O(drops) at any corpus size. Key
-  * encoding `key * 131 + band` must match [[graft.util.CapMetrics.gate]];
-  * band counts are validated `< 131`, so distinct (band, key) pairs never
-  * collide. */
-case class BucketAllowed(band: Expression, bkey: Expression, sortedKeys: Array[Long])
-    extends BinaryExpression with Predicate {
-  override def left: Expression = band
-  override def right: Expression = bkey
-  override def prettyName: String = "bucket_allowed"
-  override protected def nullSafeEval(b: Any, k: Any): Any =
-    java.util.Arrays.binarySearch(sortedKeys,
-      k.asInstanceOf[Long] * 131L + b.asInstanceOf[Int]) >= 0
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("sortedKeys", sortedKeys, "long[]")
-    defineCodeGen(ctx, ev, (b, k) =>
-      s"(java.util.Arrays.binarySearch($ref, ((long)$k) * 131L + $b) >= 0)")
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(band = l, bkey = r)
-}
-
 /** Indices of the nProbe nearest centroids (IVF coarse quantizer; the
   * centroid matrix is flattened row-major and pre-normalized). */
 case class NearestCells(child: Expression, centroids: Array[Double], dim: Int, nProbe: Int)
@@ -601,8 +576,6 @@ object vectorFunctions {
     c(MarkerHits(x(tokens), words))
   def kept_grams(text: Column, n: Int, stops: Array[String], minKept: Int): Column =
     c(KeptGrams(x(text), n, stops, minKept))
-  def bucket_allowed(band: Column, bkey: Column, sortedKeys: Array[Long]): Column =
-    c(BucketAllowed(x(band), x(bkey), sortedKeys))
   def nearest_cells(vec: Column, centroids: Array[Double], dim: Int, nProbe: Int): Column =
     c(NearestCells(x(vec), centroids, dim, nProbe))
   def topk_pairs(score: Column, id: Column, k: Int): Column =

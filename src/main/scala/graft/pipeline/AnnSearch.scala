@@ -1302,17 +1302,10 @@ object AnnSearch {
       .agg(sum(col("__q")).as("__qc"), sum(col("__c")).as("__cc"))
       .where(col("__qc") > 0 && col("__cc") > 0)
     val overCap = col("__qc") * col("__cc") > maxBucketPairs
-    val (qg, cg) = graft.util.CapMetrics.gate(bucketStats, "ann_lsh_topk",
-        "__band", "__bkey", overCap, col("__qc") * col("__cc"), checkpoint) match {
-      case Right(blocked) =>
-        val keep = (df: DataFrame) =>
-          if (blocked.isEmpty) df
-          else df.where(!graft.fuzzy.vectorFunctions.bucket_allowed(
-            col("__band"), col("__bkey"), blocked))
-        (keep(qb), keep(cb))
-      case Left(allowed) =>
-        (qb.join(allowed, Seq("__band", "__bkey")), cb)
-    }
+    val gate = graft.util.CapMetrics.gate(bucketStats, "ann_lsh_topk",
+        "__band", "__bkey", overCap, col("__qc") * col("__cc"), checkpoint)
+    val qg = gate.keep(qb, col("__band"), col("__bkey"))
+    val cg = gate.prune(cb, col("__band"), col("__bkey"))
 
     // 16-byte id pairs through the bucket join and the dedup; the exact
     // cosine runs once per unique pair after both vectors re-attach by id

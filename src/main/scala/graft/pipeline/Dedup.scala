@@ -1239,7 +1239,7 @@ object Dedup {
                               threshold: Double = 0.7,
                               maxBucketPairs: Long = 4_000_000L,
                               checkpoint: CheckpointStrategy = CheckpointStrategy.Local): DataFrame = {
-    requireBandCount(numBands)
+    CapMetrics.requireBands("numBands", numBands)
     val k = numBands * rowsPerBand
     // one pass over the batch text feeds banding AND verify
     val bState = Materialize(minhashState(batch, textCol, idCol, shingleLen, k),
@@ -1262,16 +1262,10 @@ object Dedup {
       .agg(sum(col("__q")).as("__qc"), sum(col("__c")).as("__cc"))
       .where(col("__qc") > 0 && col("__cc") > 0)
     val overCap = col("__qc") * col("__cc") > maxBucketPairs
-    val (gb, gc) = CapMetrics.gate(stats, "dedup_minhash_inc", "__band", "__bucket",
-        overCap, col("__qc") * col("__cc"), checkpoint) match {
-      case Right(blocked) =>
-        val keep = (df: DataFrame) =>
-          if (blocked.isEmpty) df
-          else df.where(!graft.fuzzy.vectorFunctions.bucket_allowed(
-            col("__band"), col("__bucket"), blocked))
-        (keep(bb), keep(cb))
-      case Left(allowed) => (bb.join(allowed, Seq("__band", "__bucket")), cb)
-    }
+    val gate = CapMetrics.gate(stats, "dedup_minhash_inc", "__band", "__bucket",
+        overCap, col("__qc") * col("__cc"), checkpoint)
+    val gb = gate.keep(bb, col("__band"), col("__bucket"))
+    val gc = gate.prune(cb, col("__band"), col("__bucket"))
     val pairs = gb.as("a").join(gc.as("b"),
         col("a.__band") === col("b.__band") && col("a.__bucket") === col("b.__bucket"))
       .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"))
@@ -1315,7 +1309,7 @@ object Dedup {
                        numBands: Int = 16, rowsPerBand: Int = 4,
                        nBuckets: Int = 64, graceGens: Int = 1): Unit = {
     require(shingleLen >= 1, s"shingleLen must be >= 1 (got $shingleLen)")
-    requireBandCount(numBands)
+    CapMetrics.requireBands("numBands", numBands)
     require(rowsPerBand >= 1, s"rowsPerBand must be >= 1 (got $rowsPerBand)")
     require(nBuckets >= 1, s"nBuckets must be >= 1 (got $nBuckets)")
     val spark = corpus.sparkSession
@@ -1437,14 +1431,8 @@ object Dedup {
     val bucketStats = bStats.join(cStats, Seq("__band", "__bucket"))
     val overCap = col("__qc") * col("__cc") > maxBucketPairs
     val gatedBb = CapMetrics.gate(bucketStats, "dedup_minhash_stored",
-        "__band", "__bucket", overCap, col("__qc") * col("__cc"),
-        checkpoint) match {
-      case Right(blocked) =>
-        if (blocked.isEmpty) bb
-        else bb.where(!graft.fuzzy.vectorFunctions.bucket_allowed(
-          col("__band"), col("__bucket"), blocked))
-      case Left(allowed) => bb.join(allowed, Seq("__band", "__bucket"))
-    }
+        "__band", "__bucket", overCap, col("__qc") * col("__cc"), checkpoint)
+      .keep(bb, col("__band"), col("__bucket"))
     val pairs = Materialize(gatedBb.as("a").join(cb.as("b"),
         col("a.__band") === col("b.__band") &&
           col("a.__bucket") === col("b.__bucket"))
@@ -1503,7 +1491,7 @@ object Dedup {
                       shingleLen: Int, numBands: Int, rowsPerBand: Int,
                       maxBucketPairs: Long,
                       checkpoint: CheckpointStrategy): (DataFrame, DataFrame) = {
-    requireBandCount(numBands)
+    CapMetrics.requireBands("numBands", numBands)
     val k = numBands * rowsPerBand
     val shingles =
       graft.fuzzy.vectorFunctions.word_shingles(lower(trim(col(textCol))), shingleLen)
@@ -1539,13 +1527,8 @@ object Dedup {
     val bucketStats = banded.groupBy(col("__band"), col("__bucket")).agg(count(lit(1)).as("__n"))
     val overCap = col("__n") * col("__n") > maxBucketPairs
     val gatedBands = CapMetrics.gate(bucketStats, "dedup_minhash", "__band", "__bucket",
-        overCap, col("__n") * col("__n"), checkpoint) match {
-      case Right(blocked) =>
-        if (blocked.isEmpty) banded
-        else banded.where(!graft.fuzzy.vectorFunctions.bucket_allowed(
-          col("__band"), col("__bucket"), blocked))
-      case Left(allowed) => banded.join(allowed, Seq("__band", "__bucket"))
-    }
+        overCap, col("__n") * col("__n"), checkpoint)
+      .keep(banded, col("__band"), col("__bucket"))
 
     // Self-join on 16-byte id rows, dedup the pair ids. Callers attach
     // whatever payload their verify needs (signatures / shingles) by id.
@@ -1641,13 +1624,8 @@ object Dedup {
     val bucketStats = chunked.groupBy(col("__chunk"), col("__ckey")).agg(count(lit(1)).as("__n"))
     val overCap = col("__n") * col("__n") > maxBucketPairs
     val gated = CapMetrics.gate(bucketStats, metricName, "__chunk", "__ckey",
-        overCap, col("__n") * col("__n"), checkpoint) match {
-      case Right(blocked) =>
-        if (blocked.isEmpty) chunked
-        else chunked.where(!graft.fuzzy.vectorFunctions.bucket_allowed(
-          col("__chunk"), col("__ckey"), blocked))
-      case Left(allowed) => chunked.join(allowed, Seq("__chunk", "__ckey"))
-    }
+        overCap, col("__n") * col("__n"), checkpoint)
+      .keep(chunked, col("__chunk"), col("__ckey"))
 
     // verify (bit_count over xor, codegen'd) and filter BEFORE the
     // pair-level dedup so the distinct shuffles only surviving pairs
@@ -1777,13 +1755,8 @@ object Dedup {
     val bucketStats = statsA.join(corpusStats, Seq("__chunk", "__ckey"))
     val overCap = col("__na") * col("__nb") > maxBucketPairs
     val gatedA = CapMetrics.gate(bucketStats, metricName, "__chunk", "__ckey",
-        overCap, col("__na") * col("__nb"), checkpoint) match {
-      case Right(blocked) =>
-        if (blocked.isEmpty) chunkedA
-        else chunkedA.where(!graft.fuzzy.vectorFunctions.bucket_allowed(
-          col("__chunk"), col("__ckey"), blocked))
-      case Left(allowed) => chunkedA.join(allowed, Seq("__chunk", "__ckey"))
-    }
+        overCap, col("__na") * col("__nb"), checkpoint)
+      .keep(chunkedA, col("__chunk"), col("__ckey"))
 
     gatedA.as("a").join(corpusChunked.as("b"),
         col("a.__chunk") === col("b.__chunk") && col("a.__ckey") === col("b.__ckey") &&
@@ -1793,16 +1766,6 @@ object Dedup {
       .where(col("hamming") <= maxHamming)
       .dropDuplicates("id_a", "id_b")
   }
-
-  /** [[graft.util.CapMetrics.gate]]'s driver-side blocked-key encoding
-    * is `key * 131 + band`: a band count ≥ 131 would alias distinct
-    * (band, key) pairs and a healthy bucket could be silently dropped
-    * with no accounting — enforce the encoding's hard bound at every
-    * banded entry point (the validated range in production is ≤ 64). */
-  private[pipeline] def requireBandCount(numBands: Int): Unit =
-    require(numBands >= 1 && numBands < 131,
-      s"numBands must be in [1, 130] (got $numBands): the bucket-cap " +
-        "blocked-key encoding (key*131+band) aliases band counts past 130")
 
   /** Bucket expression shared by the stored hamming state's writer and
     * its query-time pruning — MUST stay identical on both sides. */
@@ -2094,13 +2057,8 @@ object Dedup {
     val bucketStats = chunked.groupBy(col("__band"), col("__bkey")).agg(count(lit(1)).as("__n"))
     val overCap = col("__n") * col("__n") > maxBucketPairs
     val gated = CapMetrics.gate(bucketStats, "dedup_cosine_lsh", "__band", "__bkey",
-        overCap, col("__n") * col("__n"), checkpoint) match {
-      case Right(blocked) =>
-        if (blocked.isEmpty) chunked
-        else chunked.where(!graft.fuzzy.vectorFunctions.bucket_allowed(
-          col("__band"), col("__bkey"), blocked))
-      case Left(allowed) => chunked.join(allowed, Seq("__band", "__bkey"))
-    }
+        overCap, col("__n") * col("__n"), checkpoint)
+      .keep(chunked, col("__band"), col("__bkey"))
 
     // Self-join on id rows, dedup pair ids, re-attach both vectors by id,
     // then the exact-cosine verify runs once per unique pair.
@@ -2199,18 +2157,10 @@ object Dedup {
       .select(lit(0).cast("int").as("__band"), col("cell").as("__ckey"),
         col("__qc"), col("__cc"))
     val overCap = col("__qc") * col("__cc") > maxCellPairs
-    val (gb, gc) = CapMetrics.gate(stats, "dedup_semantic_inc", "__band", "__ckey",
-        overCap, col("__qc") * col("__cc"), checkpoint) match {
-      case Right(blocked) =>
-        val keep = (df: DataFrame) =>
-          if (blocked.isEmpty) df
-          else df.where(!graft.fuzzy.vectorFunctions.bucket_allowed(
-            lit(0).cast("int"), col("cell"), blocked))
-        (keep(bState), keep(corpusState))
-      case Left(allowed) =>
-        (bState.join(allowed.select(col("__ckey").as("cell")), Seq("cell")),
-          corpusState)
-    }
+    val gate = CapMetrics.gate(stats, "dedup_semantic_inc", "__band", "__ckey",
+        overCap, col("__qc") * col("__cc"), checkpoint)
+    val gb = gate.keep(bState, lit(0).cast("int"), col("cell"))
+    val gc = gate.prune(corpusState, lit(0).cast("int"), col("cell"))
     gb.where(col("__n2") > 0)
       .select(col("cell"), col(idCol).as("id_a"), col(vecCol).as("__va"))
       .join(gc.where(col("__n2") > 0)
@@ -2326,14 +2276,8 @@ object Dedup {
         col("__qc"), col("__cc"))
     val overCap = col("__qc") * col("__cc") > maxCellPairs
     val gatedB = CapMetrics.gate(stats, "dedup_semantic_stored", "__band", "__ckey",
-        overCap, col("__qc") * col("__cc"), checkpoint) match {
-      case Right(blocked) =>
-        if (blocked.isEmpty) bState
-        else bState.where(!graft.fuzzy.vectorFunctions.bucket_allowed(
-          lit(0).cast("int"), col("cell"), blocked))
-      case Left(allowed) =>
-        bState.join(allowed.select(col("__ckey").as("cell")), Seq("cell"))
-    }
+        overCap, col("__qc") * col("__cc"), checkpoint)
+      .keep(bState, lit(0).cast("int"), col("cell"))
     gatedB.where(col("__n2") > 0)
       .select(col("cell"), col(idCol).as("id_a"), col(vecCol).as("__va"))
       .join(cState.where(col("n2") > 0)
@@ -2404,14 +2348,8 @@ object Dedup {
     val overCap = col("__n") * col("__n") > maxCellPairs
     val pairable = base.where(col("__n2") > 0)
     val gated = CapMetrics.gate(cellStats, "dedup_semantic", "__band", "__ckey",
-        overCap, col("__n") * col("__n"), checkpoint) match {
-      case Right(blocked) =>
-        if (blocked.isEmpty) pairable
-        else pairable.where(!graft.fuzzy.vectorFunctions.bucket_allowed(
-          lit(0).cast("int"), col("cell"), blocked))
-      case Left(allowed) =>
-        pairable.join(allowed.select(col("__ckey").as("cell")), Seq("cell"))
-    }
+        overCap, col("__n") * col("__n"), checkpoint)
+      .keep(pairable, lit(0).cast("int"), col("cell"))
 
     val a = gated.select(col("cell"), col(idCol).as("__ia"),
       col(vecCol).as("__va"), col("ccosq").as("__ca"))

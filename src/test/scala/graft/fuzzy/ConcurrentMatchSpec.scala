@@ -11,8 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * pattern (MatchScope is per-thread; a long-running driver serves many
   * matches). The race under test: CapMetrics' `lastMetrics` is a global
   * keyed by stage name ("fuzzy_lsh" for every fuzzy join), so a volume-gate
-  * decision that read the global instead of its own gate call's returned
-  * stats (AnnJoin.buildOrBail via gateWithStats) could plan one join off
+  * decision that read the global instead of its own gate's stats
+  * (AnnJoin.buildOrBail via `CapMetrics.gate(...).stats`) could plan one join off
   * the OTHER join's candidate volume. Here one corpus is degenerate (the
   * runtime volume gate must bail it to exact — the sampled probe is
   * disabled so the decision rests ENTIRELY on the gate stats) and one is
@@ -23,7 +23,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class ConcurrentMatchSpec extends AnyFunSuite with SparkSpec {
 
   // degenerate: shared 10-char prefix, 3-char suffixes — kept grams fall
-  // below lshMinKeptGrams, every value reverts to its full gram set, and
+  // below AnnJoin.MinKeptGrams, every value reverts to its full gram set, and
   // band buckets go quadratic
   private def degFrames = {
     import spark.implicits._
@@ -89,6 +89,30 @@ class ConcurrentMatchSpec extends AnyFunSuite with SparkSpec {
         s"round $round: the degenerate join's volume gate did not bail to exact")
       assert(divLsh, s"round $round: the diverse join lost its LSH plan")
     }
+  }
+
+  test("overlapping LSH passes on one session restore the top-k heap conf") {
+    val conf = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
+    val original = spark.conf.getOption(conf)
+    try {
+      for (setting <- Seq(None, Some("1024"))) {
+        setting.fold(spark.conf.unset(conf))(spark.conf.set(conf, _))
+        val before = spark.conf.getOption(conf) // an unset conf reads its default
+        // one barrier step per await forces: enter A, enter B, exit A, exit B
+        val step = new CyclicBarrier(2)
+        def await(): Unit = step.await(60, TimeUnit.SECONDS)
+        val (_, duringB) = runPair(
+          { AnnJoin.withTopKHeapConf(spark, scoped = true) { await(); await() }; await(); None },
+          { await()
+            AnnJoin.withTopKHeapConf(spark, scoped = true) {
+              await(); await()
+              spark.conf.getOption(conf) // A has left, B still runs
+            } },
+          0)
+        assert(duringB.contains("4194304"), s"before=$before: B lost the override when A left")
+        assert(spark.conf.getOption(conf) == before, s"before=$before: conf not restored")
+      }
+    } finally original.fold(spark.conf.unset(conf))(spark.conf.set(conf, _))
   }
 
   test("concurrent full matches are correct and both MatchScopes release") {

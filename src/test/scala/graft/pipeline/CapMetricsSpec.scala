@@ -71,6 +71,11 @@ class CapMetricsSpec extends AnyFunSuite with SparkSpec {
     assert(cappedX.droppedBuckets > 0)
   }
 
+  // the regime a gate picked, read off the plan `keep` builds: a join
+  // against the allowed-bucket frame, or the dropped-key filter
+  private def joinsAllowed(kept: org.apache.spark.sql.DataFrame): Boolean =
+    kept.queryExecution.analyzed.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Join])
+
   test("gate key encoding distinguishes (band, key) pairs beyond band 31") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
@@ -79,48 +84,101 @@ class CapMetricsSpec extends AnyFunSuite with SparkSpec {
     // slip past the codegen'd membership filter. The kept bucket here is
     // (band=31, key=0); the DROPPED one is (band=0, key=1) — under the old
     // encoding both mapped to 31, making them indistinguishable in the
-    // blocked-key set.
+    // dropped-key set.
     val stats = Seq((31, 0L, 2L), (0, 1L, 1000L)).toDF("__band", "__bucket", "__n")
-    val gated = CapMetrics.gate(stats, "encoding_spec", "__band", "__bucket",
+    val gate = CapMetrics.gate(stats, "encoding_spec", "__band", "__bucket",
       col("__n") * col("__n") > 100L, col("__n") * col("__n"),
       graft.util.CheckpointStrategy.Local)
-    val blocked = gated.toOption.getOrElse(fail("expected driver-side gate regime"))
     val banded = Seq((31, 0L, "keep"), (0, 1L, "drop")).toDF("__band", "__bucket", "tag")
-    val kept = banded.where(!graft.fuzzy.vectorFunctions.bucket_allowed(
-        col("__band"), col("__bucket"), blocked))
-      .select("tag").collect().map(_.getString(0)).toSet
+    val keptDf = gate.keep(banded, col("__band"), col("__bucket"))
+    assert(!joinsAllowed(keptDf), "expected the driver-side dropped-key regime")
+    val kept = keptDf.select("tag").collect().map(_.getString(0)).toSet
     assert(kept == Set("keep"), s"gate admitted wrong buckets: $kept")
-    val s = CapMetrics.lastMetrics("encoding_spec").get
-    assert(s.droppedBuckets == 1 && s.totalBuckets == 2)
+    assert(gate.stats == CapMetrics.lastMetrics("encoding_spec").get)
+    assert(gate.stats.droppedBuckets == 1 && gate.stats.totalBuckets == 2)
   }
 
   test("scale regime ships only dropped keys when buckets exceed the driver cap") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     // 5 buckets against a driver cap of 2 forces cluster-side accounting;
-    // the single over-cap bucket still fits, so the gate must return the
-    // blocked-keys fast path (driver state O(drops)), NOT the
-    // allowed-frame join — that join made LSH candidate generation grow
-    // 18x at 10x values at sf10 (SCALE.md round 8).
+    // the single over-cap bucket still fits, so the gate must filter on
+    // the dropped keys (driver state O(drops)), NOT join the allowed
+    // frame — that join made LSH candidate generation grow 18x at 10x
+    // values at sf10 (SCALE.md round 8).
     val stats = Seq((0, 1L, 2L), (1, 2L, 2L), (2, 3L, 2L), (3, 4L, 2L), (0, 5L, 1000L))
       .toDF("__band", "__bucket", "__n")
-    val (gate, s) = CapMetrics.gateWithStats(stats, "scale_regime_spec", "__band",
+    val banded = Seq((0, 1L), (1, 2L), (2, 3L), (3, 4L), (0, 5L), (1, 5L))
+      .toDF("__band", "__bucket")
+    val gate = CapMetrics.gate(stats, "scale_regime_spec", "__band",
       "__bucket", col("__n") * col("__n") > 100L, col("__n") * col("__n"),
       graft.util.CheckpointStrategy.Local, maxDriverBuckets = 2)
-    val blocked = gate.toOption
-      .getOrElse(fail("expected blocked-keys regime, got the allowed-frame join"))
-    assert(blocked.toSeq == Seq(5L * 131L + 0),
-      s"blocked set should hold exactly the over-cap bucket key: ${blocked.toSeq}")
+    val kept = gate.keep(banded, col("__band"), col("__bucket"))
+    assert(!joinsAllowed(kept), "expected the dropped-key filter, got the allowed-frame join")
+    // only (band 0, key 5) is dropped: (band 1, key 5) encodes differently
+    assert(kept.as[(Int, Long)].collect().toSet ==
+      Set((0, 1L), (1, 2L), (2, 3L), (3, 4L), (1, 5L)))
+    val s = gate.stats
     assert(s.droppedBuckets == 1 && s.totalBuckets == 5)
     assert(s.droppedPairs == 1000L * 1000L && s.keptPairs == 16L)
 
     // more DROPPED buckets than the cap: the join path remains the backstop
     val allOver = Seq((0, 1L, 50L), (1, 2L, 50L), (2, 3L, 50L), (3, 4L, 50L))
       .toDF("__band", "__bucket", "__n")
-    val (gate2, s2) = CapMetrics.gateWithStats(allOver, "scale_regime_spec", "__band",
+    val gate2 = CapMetrics.gate(allOver, "scale_regime_spec", "__band",
       "__bucket", col("__n") * col("__n") > 100L, col("__n") * col("__n"),
       graft.util.CheckpointStrategy.Local, maxDriverBuckets = 2)
-    assert(gate2.isLeft, "with drops over the driver cap the gate must return a frame")
-    assert(s2.droppedBuckets == 4 && s2.keptPairs == 0L)
+    val kept2 = gate2.keep(banded, col("__band"), col("__bucket"))
+    assert(joinsAllowed(kept2), "with drops over the driver cap the gate must join a frame")
+    assert(kept2.count() == 0)
+    assert(gate2.stats.droppedBuckets == 4 && gate2.stats.keptPairs == 0L)
+  }
+
+  test("all three gate regimes keep the same rows, on both column forms") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    // six buckets, two over the cap (9 pairs): (band 0, key 3) and
+    // (band 2, key 3); (band 1, key 3) is under it
+    val sizes = Seq((0, 1L, 2), (1, 1L, 1), (0, 3L, 4), (1, 3L, 3), (2, 3L, 5), (2, 7L, 1))
+    val rows = sizes.flatMap { case (b, k, n) => (0 until n).map(i => (s"$b/$k/$i", b, k)) }
+    val overCap = col("__n") * col("__n") > 9L
+    val pairs = col("__n") * col("__n")
+    val banded = rows.toDF("id", "__band", "__bkey")
+    val bandStats = banded.groupBy("__band", "__bkey").agg(count(lit(1)).as("__n"))
+    // the semantic-dedup form: one constant band, buckets keyed by `cell`
+    val celled = rows.map { case (id, b, k) => (id, k * 10 + b) }.toDF("id", "cell")
+    val cellStats = celled.groupBy("cell").agg(count(lit(1)).as("__n"))
+      .select(lit(0).cast("int").as("__band"), col("cell").as("__ckey"), col("__n"))
+
+    def keptIds(df: org.apache.spark.sql.DataFrame): Set[String] =
+      df.select("id").collect().map(_.getString(0)).toSet
+    val expected = rows.collect { case (id, b, k) if !(k == 3L && b != 1) => id }.toSet
+
+    // (maxDriverBuckets, estBuckets) -> regime: driver collect; cluster-side
+    // dropped keys (bucket count over the driver cap, or over the
+    // estimated-bucket bar); allowed-frame join (drops over the driver cap)
+    val regimes = Seq(
+      ("driver collect", 2_000_000, -1L, false),
+      ("cluster-side dropped keys", 3, -1L, false),
+      ("cluster-side dropped keys (estimated)", 2_000_000, 1_000_000L, false),
+      ("allowed-frame join", 1, -1L, true))
+    Seq(
+      ("(__band, __bkey) columns", bandStats, "__bkey", banded, col("__band"), col("__bkey")),
+      ("lit(0) band, cell key", cellStats, "__ckey", celled, lit(0).cast("int"), col("cell"))
+    ).foreach { case (form, stats, keyCol, df, band, key) =>
+      regimes.foreach { case (regime, maxDriver, est, joins) =>
+        val gate = CapMetrics.gate(stats, "regime_spec", "__band", keyCol, overCap, pairs,
+          graft.util.CheckpointStrategy.Local, maxDriverBuckets = maxDriver, estBuckets = est)
+        val kept = gate.keep(df, band, key)
+        assert(joinsAllowed(kept) == joins, s"$form / $regime: wrong regime")
+        assert(keptIds(kept) == expected, s"$form / $regime: kept the wrong rows")
+        assert(gate.stats == CapMetrics.CapStats(2, 6, 16 + 25, 4 + 1 + 9 + 1),
+          s"$form / $regime: ${gate.stats}")
+        // prune: the same filter in the driver-set regimes, the identity
+        // beside an allowed-frame join
+        assert(keptIds(gate.prune(df, band, key)) ==
+          (if (joins) rows.map(_._1).toSet else expected), s"$form / $regime: prune")
+      }
+    }
   }
 }

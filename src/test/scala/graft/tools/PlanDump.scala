@@ -8,7 +8,9 @@ import org.apache.spark.sql.execution.ExplainMode
 
 import graft.fuzzy.{AnnJoin, FuzzyAlgorithm, FuzzyMapping, FuzzyMatcher, MatchOptions}
 
-/** Commit-able `.explain("formatted")` capture for the optimization rounds:
+/** Commit-able `.explain()` capture (the physical plan tree, one operator
+  * per line, so before/after dumps diff operator by operator) for the
+  * optimization rounds:
   * writes `plans/<round>/<name>_<tag>.txt` for the bench's fuzzy rows and
   * for the scoring-join core they share.
   *
@@ -19,7 +21,9 @@ import graft.fuzzy.{AnnJoin, FuzzyAlgorithm, FuzzyMapping, FuzzyMatcher, MatchOp
   * scoring — is therefore captured separately via the same public entry
   * points the matcher uses (`freshScoredValuePairs` for a whole fresh
   * pass, `AnnJoin.candidates` for the LSH candidate frame alone).
-  * Everything runs at sf0.001: plan SHAPE is
+  * `lsh_candidates` and `dedup_minhash` run with a bucket cap low enough
+  * that the LSH bucket gate drops buckets, so its filter shows in the
+  * plan. Everything runs at sf0.001: plan SHAPE is
   * scale-independent, and dumping must not take bench-scale minutes.
   *
   * Usage: Test/runMain graft.tools.PlanDump <tag> [round]
@@ -28,7 +32,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val tag = args.headOption.getOrElse("before")
     val round = if (args.length > 1) args(1) else "r19"
-    val outDir = Paths.get(s"/root/repo/plans/$round")
+    val outDir = Paths.get("plans", round)
     Files.createDirectories(outDir)
     val spark = SparkSession.builder().master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
@@ -39,7 +43,7 @@ object PlanDump {
     val sfDir = "/root/testdata/sf0.001"
 
     def dump(name: String, df: DataFrame): Unit = {
-      val txt = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+      val txt = df.queryExecution.explainString(ExplainMode.fromString("simple"))
       Files.write(outDir.resolve(s"${name}_$tag.txt"),
         (s"-- $name @$sfDir ($tag)\n" + txt).getBytes("UTF-8"))
       println(s"[plandump] wrote ${name}_$tag.txt (${txt.length} chars)")
@@ -67,8 +71,15 @@ object PlanDump {
       useApproxNearestNeighbor = Some(true))
     dump("lsh_candidates",
       AnnJoin.candidates(FuzzyMatcher.distinctValues(l, "c_name"),
-        FuzzyMatcher.distinctValues(r, "r_name"), "c_name", "r_name", opts, 0.1))
+        FuzzyMatcher.distinctValues(r, "r_name"), "c_name", "r_name",
+        opts.copy(lshMaxBucketPairs = 1L), 0.1))
     dump("scoring_join_lsh", fresh(FuzzyAlgorithm.Levenshtein, 90.0, opts))
+
+    // ---- a gated Dedup path: minhash LSH self-join (bucket gate -> band
+    // self-join -> pair dedup -> signature agreement) ----
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    dump("dedup_minhash", graft.pipeline.Dedup.minhashLshPairs(docs, "text", "doc_id",
+      maxBucketPairs = 1L))
 
     // ---- full bench queries (tail assembly plans; barriers make these
     // short, captured for completeness) ----
